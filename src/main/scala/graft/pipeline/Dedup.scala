@@ -65,31 +65,37 @@ object Dedup {
       df.join(sizes.filter(col("__bsz") <= maxBucketSize), bucketCols).drop("__bsz")
     }
 
-  /** [[capBuckets]] for STORE WRITES: same drop rule, but the sizes
-    * aggregate is computed once (persisted — it is one small row per
-    * distinct bucket) and the dropped-group count is surfaced as a
-    * WARNING: a corpus index silently thinner than its corpus reads as
-    * complete, and a pair whose only shared bucket was dropped is
-    * missed for good. Costs the same two input passes capBuckets
-    * already pays (sizes + join). */
+  /** [[capBuckets]] for STORE WRITES, as count-then-write: one census
+    * counts the bucket groups over `maxBucketSize`. When none is (the
+    * normal case) the frame comes back as it is, minus the rows with a
+    * null bucket key, which [[capBuckets]]' inner join drops too — no
+    * join, and the census ran once. Otherwise the count is surfaced as
+    * a WARNING (a corpus index silently thinner than its corpus reads
+    * as complete, and a pair whose only shared bucket was dropped is
+    * missed for good) and [[capBuckets]] drops the over-cap groups,
+    * running the census a second time under its join. The census is
+    * NOT cached: AQE coalesces the reduce stage of an un-cached
+    * aggregate but keeps every output partition of a cached one, so
+    * each reader of a small batch's cached census would run at
+    * `spark.sql.shuffle.partitions` tasks (PERF.md, "Store census").
+    * Eager: the census runs at call time. */
   private def capBucketsWarn(df: DataFrame, bucketCols: Seq[String],
-      maxBucketSize: Int, ctx: String)(write: DataFrame => Unit): Unit =
-    if (maxBucketSize <= 0) write(df)
+      maxBucketSize: Int, ctx: String): DataFrame =
+    if (maxBucketSize <= 0) df
     else {
-      val sizes = df.groupBy(bucketCols.map(col): _*)
-        .agg(count(lit(1)).as("__bsz")).persist()
-      try {
-        val dropped = sizes.filter(col("__bsz") > maxBucketSize).count()
-        if (dropped > 0)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"$ctx: $dropped bucket group(s) exceed maxBucketSize " +
-              s"$maxBucketSize and were DROPPED from the index — their " +
-              "rows still probe through their other buckets, but a pair " +
-              "whose only shared bucket was dropped will be missed; " +
-              "collapse boilerplate with exact dedup before indexing")
-        write(df.join(sizes.filter(col("__bsz") <= maxBucketSize),
-          bucketCols).drop("__bsz"))
-      } finally sizes.unpersist()
+      val dropped = df.groupBy(bucketCols.map(col): _*)
+        .agg(count(lit(1)).as("__bsz"))
+        .filter(col("__bsz") > maxBucketSize).count()
+      if (dropped == 0) df.filter(bucketCols.map(col(_).isNotNull).reduce(_ && _))
+      else {
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"$ctx: $dropped bucket group(s) exceed maxBucketSize " +
+            s"$maxBucketSize and were DROPPED from the index — their " +
+            "rows still probe through their other buckets, but a pair " +
+            "whose only shared bucket was dropped will be missed; " +
+            "collapse boilerplate with exact dedup before indexing")
+        capBuckets(df, bucketCols, maxBucketSize)
+      }
     }
 
   /** Cap by the JOINED population: drop bucket groups whose combined
@@ -142,13 +148,14 @@ object Dedup {
     }
 
   /** [[capBuckets]] that COUNTS dropped groups and WARNS — the
-    * returning-frame sibling of [[capBucketsWarn]] for in-frame doors
-    * whose narrow bucket domain makes silent saturation REACHABLE (the
+    * in-frame sibling of [[capBucketsWarn]] for doors whose narrow
+    * bucket domain makes silent saturation REACHABLE (the
     * widened-radius SimHash chunkings: 256 or 16 bucket values per
     * chunk, so any frame past ~cap × domain rows drops essentially
-    * every group and returns zero pairs). Eager: the bucket census runs
-    * at call time (one aggregate pass, snapped — the join reuses the
-    * tiny censused list, not the pass). */
+    * every group and returns zero pairs). There drops are the common
+    * case, not the exception, so the census is snapped once and the
+    * join reuses the tiny censused list instead of re-running the
+    * pass. Eager: the bucket census runs at call time. */
   private def capBucketsWarned(df: DataFrame, bucketCols: Seq[String],
       maxBucketSize: Int, ctx: String): DataFrame =
     if (maxBucketSize <= 0) df
@@ -531,6 +538,12 @@ object Dedup {
     * key + (id, sig) rows bucketed by id, param stamp unset across the
     * non-atomic two-table window (a crash leaves a store the doors
     * refuse loudly), per-batch hot buckets capped with a WARNING.
+    * Write flow: the sigs table first (on append from a snapshot of the
+    * one sign pass, which also feeds the band rows; on overwrite the
+    * band rows read the written sigs back), then one bucket census of
+    * the band rows that only COUNTS the over-cap groups
+    * ([[capBucketsWarn]]), then the band table — written as banded when
+    * the count is 0, through the cap's join otherwise.
     * `sign` must produce (id, sig) and null-propagate on null text
     * ([[bandExplode]] then drops the null signatures — the hash(null)
     * phantom-bucket lesson, review r16). */
@@ -575,14 +588,12 @@ object Dedup {
       numHashes, bands)
       .select(col("id"), col("band"), col("bucket"))
     capBucketsWarn(banded, Seq("band", "bucket"), maxBucketSize,
-      s"$writer($table)") { slim =>
-      slim
-        .repartition(buckets, col("band"), col("bucket"))
-        .write.mode(mode)
-        .bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
-        .format("parquet")
-        .saveAsTable(table)
-    }
+      s"$writer($table)")
+      .repartition(buckets, col("band"), col("bucket"))
+      .write.mode(mode)
+      .bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
+      .format("parquet")
+      .saveAsTable(table)
     stampStore(spark, table, modeNorm, existedBefore, prop, payload)
   }
 
@@ -1038,15 +1049,13 @@ object Dedup {
     val tmp = table + "__compact"
     graft.join.SpatialJoin.dropBucketedTable(spark, tmp)
     capBucketsWarn(spark.table(table).distinct(), bucketCols,
-      maxBucketSize, ctx) { capped =>
-      capped
-        .repartition(buckets, bucketCols.map(col): _*)
-        .write.mode("overwrite")
-        .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .format("parquet")
-        .saveAsTable(tmp)
-    }
+      maxBucketSize, ctx)
+      .repartition(buckets, bucketCols.map(col): _*)
+      .write.mode("overwrite")
+      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
+      .sortBy(bucketCols.head, bucketCols.tail: _*)
+      .format("parquet")
+      .saveAsTable(tmp)
     // swap: unset the stamp FIRST so a crash anywhere in the drop+rename
     // window (and the sibling vacuum after it) leaves a loudly-refused
     // store, not a silently stale one
@@ -1344,15 +1353,12 @@ object Dedup {
     val (modeNorm, existedBefore) = checkStoreWrite(spark, table, mode,
       SimhashStoreProp, payload, "writeSimhashStore")
     capBucketsWarn(simhashChunked(df, idCol, textCol, chunks),
-      Seq("chunk", "bucket"), maxBucketSize,
-      s"writeSimhashStore($table)") { chunked =>
-      chunked
-        .repartition(buckets, col("chunk"), col("bucket"))
-        .write.mode(mode)
-        .bucketBy(buckets, "chunk", "bucket").sortBy("chunk", "bucket")
-        .format("parquet")
-        .saveAsTable(table)
-    }
+      Seq("chunk", "bucket"), maxBucketSize, s"writeSimhashStore($table)")
+      .repartition(buckets, col("chunk"), col("bucket"))
+      .write.mode(mode)
+      .bucketBy(buckets, "chunk", "bucket").sortBy("chunk", "bucket")
+      .format("parquet")
+      .saveAsTable(table)
     stampStore(spark, table, modeNorm, existedBefore, SimhashStoreProp, payload)
   }
 
@@ -1682,14 +1688,12 @@ object Dedup {
     val bucketRows = embeddingBucketRows(
       vecSource.getOrElse(spark.table(vecTable)), bitsR, tablesR)
     capBucketsWarn(bucketRows, Seq("t", "sig"), maxBucketSize,
-      s"writeEmbeddingStore($table)") { slim =>
-      slim
-        .repartition(buckets, col("t"), col("sig"))
-        .write.mode(mode)
-        .bucketBy(buckets, "t", "sig").sortBy("t", "sig")
-        .format("parquet")
-        .saveAsTable(table)
-    }
+      s"writeEmbeddingStore($table)")
+      .repartition(buckets, col("t"), col("sig"))
+      .write.mode(mode)
+      .bucketBy(buckets, "t", "sig").sortBy("t", "sig")
+      .format("parquet")
+      .saveAsTable(table)
     stampStore(spark, table, modeNorm, existedBefore, EmbeddingStoreProp, payload)
   }
 

@@ -784,38 +784,53 @@ class PipelineSpec extends AnyFunSuite {
     // the frame is garbage-collected — a lazy, GC-timed event, not a
     // prompt one. The testable no-leak contract is therefore AMORTIZED:
     // a call loop with dropped results must not grow the persistent-RDD
-    // set without bound. An explicit persist() with no unpersist() (the
-    // bug class this test guards) is never collected and fails the
-    // growth bound within a few iterations.
-    val before = spark.sparkContext.getPersistentRDDs.keySet.size
-    def run(): Unit = {
+    // set. The bound allows one call's snapshots and no more, below the
+    // loop's call count, so an explicit persist() with no unpersist()
+    // (the bug class this test guards) fails it even at one leaked RDD
+    // per call: such an RDD is never collected.
+    val iterations = 8
+    def count() = spark.sparkContext.getPersistentRDDs.keySet.size
+    def checkNoGrowth(door: String, snapsPerCall: Int)(run: Int => Unit): Unit = {
+      require(snapsPerCall < iterations)
+      val before = count()
+      val bound = before + snapsPerCall
+      var worst = 0
+      (1 to iterations).foreach { i =>
+        run(i)
+        // drive the cleaner with a bounded retry loop, not one fixed
+        // sleep: the async unpersists can lag a single 100 ms window on
+        // a loaded box, and System.gc() may be a no-op under
+        // -XX:+DisableExplicitGC — only a count persistently over the
+        // bound is a leak
+        var n = count()
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (n > bound && System.nanoTime() < deadline) {
+          System.gc(); Thread.sleep(200); n = count()
+        }
+        worst = math.max(worst, n)
+      }
+      assert(worst <= bound,
+        s"$door snapshots accumulate: persistent-RDD count held at " +
+          s"$worst over $iterations calls (bound $bound) after GC retries — " +
+          "a snapshot is being held past its frame's lifetime or persist() " +
+          "lost its unpersist()")
+    }
+    // signed snap + sh snap + connected-components internals
+    checkNoGrowth("nearDupMinhash", snapsPerCall = 3) { _ =>
       Dedup.nearDupMinhash(docs, "doc_id", "text", threshold = 0.6).count()
       ()
     }
-    val iterations = 8
-    val snapsPerCall = 3 // signed snap + sh snap + connected-components internals
-    val bound = before + 3 * snapsPerCall
-    def count() = spark.sparkContext.getPersistentRDDs.keySet.size
-    var worst = 0
-    (1 to iterations).foreach { _ =>
-      run()
-      // drive the cleaner with a bounded retry loop, not one fixed
-      // sleep: the async unpersists can lag a single 100 ms window on a
-      // loaded box, and System.gc() may be a no-op under
-      // -XX:+DisableExplicitGC — only a count persistently over the
-      // bound is a leak
-      var n = count()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (n > bound && System.nanoTime() < deadline) {
-        System.gc(); Thread.sleep(200); n = count()
+    // the append's signature snapshot
+    val table = "graft_pipeline_leak_store"
+    Dedup.dropMinhashStore(spark, table)
+    try {
+      Dedup.writeMinhashStore(docs, table, buckets = 2)
+      checkNoGrowth("writeMinhashStore(append)", snapsPerCall = 1) { i =>
+        Dedup.writeMinhashStore(
+          docs.withColumn("doc_id", $"doc_id" + 100L * i), table,
+          buckets = 2, mode = "append")
       }
-      worst = math.max(worst, n)
-    }
-    assert(worst <= bound,
-      s"minhash snapshots accumulate: persistent-RDD count held at " +
-        s"$worst over $iterations calls (bound $bound) after GC retries — " +
-        "a snapshot is being held past its frame's lifetime or persist() " +
-        "lost its unpersist()")
+    } finally Dedup.dropMinhashStore(spark, table)
   }
 
   test("embedding OR-amplification recovers planted 0.95-cosine neighbors") {
